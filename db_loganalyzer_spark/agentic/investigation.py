@@ -607,6 +607,7 @@ class PhasedInvestigationAgent:
         self, events: DataFrame, question: str, baselines: DataFrame | None = None
     ):
         from ..detectors import detectors as D
+        from ..operators.windows import released_checkpoints
         from ..sources.trace_logs import derive_event_metrics
         from . import tools as T
         from .knowledge_base import knowledge_base_text
@@ -645,9 +646,11 @@ class PhasedInvestigationAgent:
                 top = T.top_events(events, severity_min=30, limit=500)
                 tools_used.append("scanner.top_events")
                 acc = top
-                additional.append(("severity_counts", T.severity_counts(events)))
+                sev = T.severity_counts(events)
+                additional.append(("severity_counts", sev))
                 tools_used.append("scanner.severity_counts")
-                additional.append(("event_histogram", T.event_histogram(events, 10)))
+                hist = T.event_histogram(events, 10)
+                additional.append(("event_histogram", hist))
                 tools_used.append("scanner.event_histogram")
                 span = T.time_span(events)
                 additional.append(("time_span", span))
@@ -662,11 +665,16 @@ class PhasedInvestigationAgent:
                     if e not in glanced_300:
                         glanced_300.add(e)
                         dive_order.append((300, e))
-                summary = T.global_summary(events)
+                # global_summary's parts are the three results above;
+                # recomputing them would cost three more jobs
+                summary = T.summarize(sev, hist, span)
                 additional.append(("global_summary", summary))
                 tools_used.append("scanner.global_summary")
-                rb = D.rollback_analysis(events)
-                rollback_info = dict(rb["summary"].collect()[0].asDict())
+                # only the summary row is read, so the stitched scans'
+                # checkpoints are released as soon as it is collected
+                with released_checkpoints():
+                    rb = D.rollback_analysis(events)
+                    rollback_info = dict(rb["summary"].collect()[0].asDict())
                 additional.append(("rollback_analysis", rollback_info))
                 tools_used.append("scanner.rollback_analysis")
                 event_metrics = derive_event_metrics(events)

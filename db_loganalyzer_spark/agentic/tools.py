@@ -60,12 +60,19 @@ def time_span(events: DataFrame) -> dict:
 
 def global_summary(events: DataFrame) -> dict:
     """Composite sweep summary (scanner.global_summary)."""
-    maxsev = events.agg(F.max("severity")).collect()[0][0]
+    return summarize(
+        severity_counts(events), event_histogram(events, 10), time_span(events)
+    )
+
+
+def summarize(sev_counts: dict, histogram: dict, span: dict) -> dict:
+    """``global_summary``'s dict from its already-collected parts, with no
+    Spark job: the max severity is the largest non-null severity key."""
     return {
-        "max_severity": maxsev,
-        "severity_counts": severity_counts(events),
-        "event_histogram": event_histogram(events, 10),
-        "time_span": time_span(events),
+        "max_severity": max((s for s in sev_counts if s is not None), default=None),
+        "severity_counts": sev_counts,
+        "event_histogram": histogram,
+        "time_span": span,
     }
 
 
@@ -143,6 +150,7 @@ __all__ = [
     "event_histogram",
     "time_span",
     "global_summary",
+    "summarize",
     "high_severity_buckets",
     "get_uncovered",
     "context_window",

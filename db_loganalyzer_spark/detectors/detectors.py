@@ -550,7 +550,11 @@ def rollback_analysis(events: DataFrame) -> dict[str, DataFrame]:
     regression scans into one status row (reference:
     global_scanner.py:258-401). Ordering partitioned by machine_id keeps
     the scan scalable; the reference's single global order is the
-    machine_id=constant special case."""
+    machine_id=constant special case.
+
+    The returned frames read the four stitched scans' localCheckpoints; a
+    caller done with them drops those by running the call and its reads
+    inside ``operators.windows.released_checkpoints()``."""
     from ..operators.windows import (
         lag_regressions_stitched,
         value_drops_stitched,

@@ -16,6 +16,8 @@ rank. Output is bit-identical to the single-partition window.
 from __future__ import annotations
 
 import warnings
+from contextlib import contextmanager
+from contextvars import ContextVar
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -362,11 +364,7 @@ def severity_first_ranking(
     # execution of the returned DataFrame would each re-sample — different
     # boundaries, misaligned offsets, silently wrong ranks. Checkpointing
     # makes the counted partitioning the same one all consumers read.
-    part = (
-        df.repartitionByRange(*order)
-        .sortWithinPartitions(*order)
-        .localCheckpoint(eager=True)
-    )
+    part = _local_checkpoint(df.repartitionByRange(*order).sortWithinPartitions(*order))
     with_pid = part.withColumn("__pid", F.spark_partition_id())
     counts = sorted(
         (r["__pid"], r["cnt"])
@@ -390,6 +388,44 @@ def severity_first_ranking(
 
 
 # ---------------------------------------------------------------------------
+# Checkpoint release. The unbounded rank above and the stitched operators
+# below pin their range-sorted input with an eager localCheckpoint; the
+# frames they return read those blocks, so the blocks have to outlive every
+# consumer and no operator can drop them itself. A caller that knows when
+# its consumers are done wraps the work in ``released_checkpoints()``;
+# outside such a block a checkpoint stays until the session ends.
+# ---------------------------------------------------------------------------
+
+_checkpoints: ContextVar[list[DataFrame] | None] = ContextVar("_checkpoints", default=None)
+
+
+def _local_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``, recorded in the enclosing
+    ``released_checkpoints`` block if there is one."""
+    out = df.localCheckpoint(eager=True)
+    taken = _checkpoints.get()
+    if taken is not None:
+        taken.append(out)
+    return out
+
+
+@contextmanager
+def released_checkpoints():
+    """Unpersist, on exit, every localCheckpoint this module's operators
+    take inside the block. Frames built inside must not be read after it."""
+    taken: list[DataFrame] = []
+    token = _checkpoints.set(taken)
+    try:
+        yield
+    finally:
+        _checkpoints.reset(token)
+        for df in taken:
+            # the checkpointed blocks belong to the RDD under the frame's
+            # LogicalRDD plan
+            df._jdf.logicalPlan().rdd().unpersist(False)
+
+
+# ---------------------------------------------------------------------------
 # Stitched global-order variants (W1-W3, W5 with no partition key).
 #
 # Shared recipe: repartitionByRange on the total order + sortWithinPartitions
@@ -408,7 +444,7 @@ def _range_sorted(df: DataFrame, ts_col: str, tiebreak: str | None, num_partitio
         if num_partitions
         else df.repartitionByRange(*order)
     )
-    part = part.sortWithinPartitions(*order).localCheckpoint(eager=True)
+    part = _local_checkpoint(part.sortWithinPartitions(*order))
     return part.withColumn("__pid", F.spark_partition_id()), order
 
 
@@ -537,10 +573,8 @@ def running_sum_stitched(
         if num_partitions
         else df.repartitionByRange(*order)
     )
-    part = (
-        part.sortWithinPartitions(*order)
-        .localCheckpoint(eager=True)
-        .withColumn("__pid", F.spark_partition_id())
+    part = _local_checkpoint(part.sortWithinPartitions(*order)).withColumn(
+        "__pid", F.spark_partition_id()
     )
     totals = {
         r["__pid"]: r["__t"]

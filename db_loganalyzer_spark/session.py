@@ -4,6 +4,20 @@ Local testing runs ``local[N]`` in one JVM; the configs below are chosen so
 the same code scales to a real cluster: AQE for runtime re-planning and skew
 joins, UTC session timezone (matches the DuckDB oracle and the reference's
 UTC trace timestamps), Arrow for the few pandas-UDF paths.
+
+Generated-code cache. Spark keeps the classes whole-stage codegen compiles
+in one LRU per JVM, keyed by the generated source and capped at
+``spark.sql.codegen.cache.maxEntries`` (default 100). This engine's working
+set is far larger (sizes at ``CODEGEN_CACHE_ENTRIES``), and an LRU cycling over more
+keys than it holds misses on every key: at the default, every repeated
+query or investigation recompiled nearly all of its classes with Janino
+(~125 of ~133 per pass over the 10 headline queries, ~450 per repeated
+investigation). The cap is sized to hold the whole registry plus an
+investigation, so a plan shape is compiled once per driver. Sizes were
+counted with Spark's ``CodegenMetrics`` compile counter under a cap that
+never evicts, where each compile is one distinct class. The cap is a static
+conf, read once per JVM at the first codegen, so it is set here in the
+builder.
 """
 
 from __future__ import annotations
@@ -13,6 +27,14 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# Distinct generated classes, counted with CodegenMetrics on a fresh driver
+# (4 cores): 133 for the 10 headline queries at sf0.01; 400-460 for one
+# phased investigation over 1,000 log events; 2,705-2,721 (two runs) for one
+# pass of scripts/check_oracle.py over all 213 registry entries at sf0.01,
+# where AQE's run-dependent stage ids add a few variants. The cap is
+# the registry plus one investigation (~3,200) with headroom, rounded up.
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -42,6 +64,7 @@ def get_spark(
         # larger cached-columnar batches amortize per-batch dispatch in
         # whole-stage codegen over cached tables (default 10k is conservative)
         .config("spark.sql.inMemoryColumnarStorage.batchSize", "65536")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # the driver's events.parquet has stored ts as TIMESTAMP(NANOS)
         # (no native Spark type; read as long + convert in load_table) or
         # as naive TIMESTAMP(MICROS). For the latter, NTZ inference is

@@ -146,6 +146,21 @@ def test_rollback_analysis_releases_input_persists(spark, log_events):
     assert len(after - before) == 4
 
 
+def test_rollback_analysis_checkpoints_released_in_scope(spark, log_events):
+    """Inside ``released_checkpoints`` the 4 stitched checkpoints are
+    dropped at exit, so a caller that only reads the summary row leaves
+    executor storage as it found it."""
+    from db_loganalyzer_spark.operators.windows import released_checkpoints
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet().toArray())
+    with released_checkpoints():
+        s = D.rollback_analysis(log_events)["summary"].collect()[0]
+        assert len(set(jsc.getPersistentRDDs().keySet().toArray()) - before) == 4
+    assert s.num_drops == 2 and s.num_resets == 1 and s.num_recovery_resets == 1
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) == before
+
+
 def test_recovery_episodes(spark, log_events):
     eps = D.recovery_episodes(log_events)["episodes"].collect()
     assert len(eps) == 2
